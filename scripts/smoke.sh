@@ -10,6 +10,10 @@
 # QueriesSpec = every declared query constructs AND returns rows on the
 # CURRENT sf0.001 testdata + the scalar-schema invariant the driver's
 # comparator needs + oracle-key/query-key consistency.
+#
+# PipelineSpec + ApiSpec = the ledger path end to end (ingest → normalize →
+# by-wallet reads, as library calls and as served HTTP routes), so a break
+# in the reference's own product path is caught before handoff too.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-sbt -batch "testOnly graft.QueriesSpec"
+sbt -batch "testOnly graft.QueriesSpec graft.PipelineSpec graft.ApiSpec"

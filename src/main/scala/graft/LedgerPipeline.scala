@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Pmod, XxHash64}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
+import graft.model.Schemas
 import graft.operators.IdempotentSink
 import graft.sources.BronzeSource
 
@@ -21,6 +24,19 @@ import graft.sources.BronzeSource
   * queries push the wallet filter into the parquet scan. At 100 TB the
   * tables would be written bucketed by wallet (layout decision of the
   * writer; the queries are layout-agnostic).
+  *
+  * A by-wallet read runs only the jobs its answer needs:
+  *  - the wallet's bucket is computed on the driver by evaluating the
+  *    same catalyst expression the writer projects ([[bucketOf]]), so no
+  *    job hashes the wallet name;
+  *  - the table root is read with its declared schema ([[Schemas.bronze]]
+  *    or [[Schemas.silver]] plus `_bucket: long`), so no job infers it;
+  *  - ordering is a single-partition sort, not a global `orderBy`: the
+  *    bucket scan stays parallel, one exchange gathers the wallet's rows
+  *    into one partition, and that partition is sorted — no range-
+  *    partition sampling job and no second scan. One wallet's history is
+  *    what one HTTP response holds, so one sorted partition is the
+  *    contract, not a bottleneck.
   */
 object LedgerPipeline {
 
@@ -31,17 +47,21 @@ object LedgerPipeline {
     */
   val DefaultBuckets = 16
 
-  /** Deterministic wallet bucket — must be computed with the same Spark
-    * expression on write and read so pruning literals agree.
+  /** Deterministic wallet bucket, `pmod(xxhash64(wallet), nBuckets)`. The
+    * writer's column ([[bucketCol]]) and the reader's driver-side literal
+    * ([[bucketOf]]) are both built from this one constructor, so the
+    * pruning literal cannot drift from the partition value on disk.
     */
-  private def bucketCol(nBuckets: Int) =
-    pmod(xxhash64(col("wallet_address")), lit(nBuckets.toLong)).as("_bucket")
+  private def bucketExpr(wallet: Expression, nBuckets: Int): Expression =
+    Pmod(new XxHash64(Seq(wallet)), Literal(nBuckets.toLong))
 
-  private def bucketOf(spark: SparkSession, wallet: String, nBuckets: Int): Long = {
-    import spark.implicits._
-    spark.range(1)
-      .select(pmod(xxhash64(lit(wallet)), lit(nBuckets.toLong))).as[Long].head()
-  }
+  private[graft] def bucketCol(nBuckets: Int): Column =
+    GraftSqlBridge.column(
+      bucketExpr(GraftSqlBridge.expression(col("wallet_address")), nBuckets)).as("_bucket")
+
+  /** The wallet's bucket, evaluated on the driver: no Spark job. */
+  private[graft] def bucketOf(wallet: String, nBuckets: Int): Long =
+    bucketExpr(Literal(wallet), nBuckets).eval().asInstanceOf[Long]
 
   /** Ingest a wallet's history into the bronze table (hash-bucketed by
     * wallet). Returns rows appended.
@@ -60,37 +80,39 @@ object LedgerPipeline {
     */
   def normalize(spark: SparkSession, bronzePath: String, wallet: String,
       silverPath: String, nBuckets: Int = DefaultBuckets): Long = {
-    val bronze = byWallet(spark, bronzePath, wallet, nBuckets)
-      .drop("_bucket")
+    val bronze = byWallet(spark, bronzePath, Schemas.bronze, wallet, nBuckets)
     IdempotentSink.appendOnce(spark,
       graft.normalize.ChainNormalizers.normalizeAll(bronze)
         .withColumn("_bucket", bucketCol(nBuckets)),
       silverPath, "id", partitionCols = Seq("_bucket"))
   }
 
-  /** Bucket-pruned by-wallet scan: the `_bucket = h(wallet)` predicate is a
-    * partition filter (prunes directories); the wallet equality then pushes
-    * into the parquet reader within the surviving bucket.
+  /** Bucket-pruned by-wallet scan over a table written with `schema`: the
+    * `_bucket = h(wallet)` predicate is a partition filter (prunes
+    * directories); the wallet equality then pushes into the parquet reader
+    * within the surviving bucket. The declared schema means no inference
+    * job, and a written-but-empty table reads as zero rows. A path that
+    * was never written still fails with PATH_NOT_FOUND, which the API
+    * serves as `[]`.
     */
-  private def byWallet(spark: SparkSession, path: String, wallet: String,
-      nBuckets: Int): DataFrame =
-    spark.read.parquet(path)
-      .filter(col("_bucket") === bucketOf(spark, wallet, nBuckets) &&
+  private def byWallet(spark: SparkSession, path: String, schema: StructType,
+      wallet: String, nBuckets: Int): DataFrame =
+    spark.read.schema(schema.add("_bucket", LongType)).parquet(path)
+      .filter(col("_bucket") === bucketOf(wallet, nBuckets) &&
         col("wallet_address") === wallet)
+      .drop("_bucket")
 
   /** `GET /v1/transactions/:wallet` (repo.rs:73-107). */
   def transactions(spark: SparkSession, bronzePath: String, wallet: String,
       nBuckets: Int = DefaultBuckets): DataFrame =
-    byWallet(spark, bronzePath, wallet, nBuckets)
-      .drop("_bucket")
-      .orderBy("timestamp")
+    byWallet(spark, bronzePath, Schemas.bronze, wallet, nBuckets)
+      .repartition(1).sortWithinPartitions("timestamp")
 
   /** `GET /v1/ledger/:wallet` (repo.rs:109-149). */
   def ledger(spark: SparkSession, silverPath: String, wallet: String,
       nBuckets: Int = DefaultBuckets): DataFrame =
-    byWallet(spark, silverPath, wallet, nBuckets)
-      .drop("_bucket")
-      .orderBy("transaction_id", "asset_symbol")
+    byWallet(spark, silverPath, Schemas.silver, wallet, nBuckets)
+      .repartition(1).sortWithinPartitions("transaction_id", "asset_symbol")
 
   /** Fill the ledger's `fiat_value` design slot — the column the
     * reference models but never populates (`LedgerEntry.fiat_value`,

@@ -3,7 +3,7 @@ package graft.api
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s.{JString, JInt}
@@ -44,6 +44,7 @@ final class ApiServer(spark: SparkSession, source: BronzeSource,
     queryRowCap: Int = 1000) {
 
   @volatile private var server: HttpServer = _
+  private var pool: ExecutorService = _
 
   /** Serializes `/v1/query` request handling: a handful of declared
     * queries write fixed-location layout artifacts as part of their plan
@@ -67,13 +68,28 @@ final class ApiServer(spark: SparkSession, source: BronzeSource,
     server.createContext("/", (ex: HttpExchange) => handle(ex))
     // small fixed pool: requests run Spark driver-side actions, and the
     // session is shared — bounded concurrency, not per-request threads
-    server.setExecutor(Executors.newFixedThreadPool(4))
+    pool = Executors.newFixedThreadPool(4, (r: Runnable) => {
+      val t = new Thread(r)
+      t.setName(s"${ApiServer.ThreadPrefix}${t.getId}")
+      t
+    })
+    server.setExecutor(pool)
     server.start()
     server.getAddress.getPort
   }
 
+  /** Stop serving and shut the request pool down. The pool's threads are
+    * non-daemon, so a server left running would keep its JVM alive; after
+    * `stop()` returns, in-flight requests have had up to 30 s to finish.
+    */
   def stop(): Unit = synchronized {
-    if (server != null) { server.stop(0); server = null }
+    if (server != null) {
+      server.stop(0)
+      server = null
+      pool.shutdown()
+      pool.awaitTermination(30, TimeUnit.SECONDS)
+      pool = null
+    }
   }
 
   private def handle(ex: HttpExchange): Unit = {
@@ -209,4 +225,10 @@ final class ApiServer(spark: SparkSession, source: BronzeSource,
     ex.sendResponseHeaders(status, bytes.length.toLong)
     ex.getResponseBody.write(bytes)
   }
+}
+
+object ApiServer {
+
+  /** Name prefix of the request-pool threads. */
+  private[graft] val ThreadPrefix = "graft-api-"
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Exactly-once-by-key append — the reference's only write-correctness
   * guarantee: `INSERT … ON CONFLICT (id) DO NOTHING`
@@ -10,6 +11,13 @@ import org.apache.spark.sql.functions._
   * Batch semantics: dedupe the incoming batch on the key, anti-join against
   * the existing table's keys, append the remainder. Replaying the same batch
   * is a no-op.
+  *
+  * Evaluated once: [[appendOnce]] pins the deduped batch before the
+  * anti-join, so the batch's source subtree (a JSONL parse, a normalizer,
+  * network fetches) runs exactly once per append even though the
+  * anti-join reads it twice (broadcast key side + left side). Callers
+  * therefore never pin a batch just for this operator; they pin only when
+  * the batch feeds other consumers too.
   *
   * Scale design: the anti-join probes only the key column of the existing
   * table (column-pruned parquet scan of one string column, not the full
@@ -195,23 +203,29 @@ object IdempotentSink {
     * and double-inserting — the loud-failure analogue of the reference's
     * serialized `ON CONFLICT DO NOTHING`. Retrying the failed batch after
     * the winner's append is safe by idempotence.
+    *
+    * `batch` is evaluated exactly once (see the object doc).
     */
   def appendOnce(spark: SparkSession, batch: DataFrame, path: String, keyCol: String,
       partitionCols: Seq[String] = Nil): Long = withTableLock(spark, path) {
-    // Checkpoint, not persist(): the anti-join reads the same table this
-    // method appends to. A plain persist() keeps the lineage alive, so an
-    // evicted/lost cached partition recomputed AFTER the append commits
-    // would re-run the anti-join against the mutated table and drop rows
-    // mid-write. Checkpointing severs that lineage — a lost block fails the
-    // job loudly instead of corrupting the output (see [[withPinned]] for
-    // the held-RDD mechanics).
-    withPinned(dedupeAgainstExisting(spark, batch, path, keyCol)) { fresh =>
-      val n = fresh.count() // materializes the checkpoint
-      if (n > 0) {
-        val w = fresh.write.mode(SaveMode.Append)
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
+    // Two pins. The first holds the deduped batch, which the anti-join
+    // references twice, so its source runs once. The second is a
+    // checkpoint, not persist(), of the rows to append: the anti-join
+    // reads the same table this method appends to, and a plain persist()
+    // keeps the lineage alive, so an evicted/lost cached partition
+    // recomputed AFTER the append commits would re-run the anti-join
+    // against the mutated table and drop rows mid-write. Checkpointing
+    // severs that lineage — a lost block fails the job loudly instead of
+    // corrupting the output (see [[withPinned]] for the held-RDD mechanics).
+    withPinned(batch.dropDuplicates(keyCol)) { deduped =>
+      withPinned(absentFrom(spark, deduped, path, keyCol)) { fresh =>
+        val n = fresh.count() // materializes both checkpoints
+        if (n > 0) {
+          val w = fresh.write.mode(SaveMode.Append)
+          (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
+        }
+        n
       }
-      n
     }
   }
 
@@ -243,21 +257,27 @@ object IdempotentSink {
   }
 
   /** The pure (side-effect-free) core: batch rows whose key is not already
-    * present at `path`, with in-batch duplicates collapsed.
+    * present at `path`, with in-batch duplicates collapsed. The existing-key
+    * probe reads the table with the batch's key field as its declared
+    * schema, so it runs no schema-inference job.
     */
   def dedupeAgainstExisting(
-      spark: SparkSession, batch: DataFrame, path: String, keyCol: String): DataFrame = {
-    val deduped = batch.dropDuplicates(keyCol)
+      spark: SparkSession, batch: DataFrame, path: String, keyCol: String): DataFrame =
+    absentFrom(spark, batch.dropDuplicates(keyCol), path, keyCol)
+
+  /** Rows of the already-deduped `deduped` whose key is not present at `path`. */
+  private def absentFrom(
+      spark: SparkSession, deduped: DataFrame, path: String, keyCol: String): DataFrame =
     if (!tableExists(spark, path)) deduped
     else {
-      val existingKeys = spark.read.parquet(path).select(col(keyCol))
+      val existingKeys = spark.read.schema(StructType(Seq(deduped.schema(keyCol))))
+        .parquet(path).select(col(keyCol))
       // New batches are typically tiny vs the table: broadcast the batch
       // keys so the existing-keys scan never shuffles.
       val dupKeys = existingKeys
         .join(broadcast(deduped.select(col(keyCol))), Seq(keyCol), "left_semi")
       deduped.join(dupKeys, Seq(keyCol), "left_anti")
     }
-  }
 
   private[graft] def tableExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)

@@ -56,10 +56,9 @@ final class RpcPoller(
   def pollOnce(spark: SparkSession): Long = {
     val fresh = ingestor.fetchSignatures(wallet, pageLimit, stopAt = cursor)
     if (fresh.isEmpty) return 0L // idle: cursor is still the newest
-    // eager pin: the keyed append evaluates its batch more than once
-    // (broadcast key side + write pass), and re-evaluating THIS batch
-    // means re-paying per-signature network round-trips
-    val page = ingestor.fetchBySignatures(spark, wallet, fresh).localCheckpoint(true)
+    // unpinned: the keyed append evaluates its batch once, so each
+    // signature's network round-trip is paid once
+    val page = ingestor.fetchBySignatures(spark, wallet, fresh)
     val n = IdempotentSink.appendOnce(spark, page, tablePath, "id")
     // fresh is newest-first: head is the new cursor
     cursor = Some(fresh.head)

@@ -157,10 +157,10 @@ object CorpusIngest {
             .select(col("id_l").as(idCol)).distinct()
           within.join(dupIds, Seq(idCol), "left_anti")
         }
-      // Survivors feed two writes (corpus + signatures) and the anti-join
-      // re-evaluates the batch subtree: pin once so a replayed or
-      // non-deterministic source can't diverge between the writes, and so
-      // a long-running ingest releases each batch's blocks as it goes.
+      // Survivors feed three writes (corpus, signatures, digests): pin
+      // once so a replayed or non-deterministic source can't diverge
+      // between the writes, and so a long-running ingest releases each
+      // batch's blocks as it goes.
       IdempotentSink.withPinned(survivors) { pinned =>
         val n = IdempotentSink.appendOnce(spark, pinned, corpusPath, idCol)
         IdempotentSink.appendOnce(spark,

@@ -117,4 +117,25 @@ class ApiSpec extends SparkSpec {
       graft.tools.OracleAux.enabled = true
     }
   }
+
+  test("stop() shuts the request pool down: start → serve → stop leaves no live pool thread") {
+    val tmp = Files.createTempDirectory("apistop").toString
+    val srv = new ApiServer(spark, new JsonlBronzeSource(s"$tmp/in"),
+      s"$tmp/bronze", s"$tmp/silver")
+    def poolThreads() = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.isAlive && t.getName.startsWith(ApiServer.ThreadPrefix))
+    try {
+      val port = srv.start()
+      assert(get(port, "/health").body() == "OK")
+      assert(poolThreads().nonEmpty, "a served request runs on a pool thread")
+    } finally {
+      srv.stop()
+      graft.tools.OracleAux.enabled = true
+    }
+    // a worker reports the pool terminated just before its thread returns
+    val deadline = System.currentTimeMillis() + 5000
+    while (poolThreads().nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    assert(poolThreads().isEmpty,
+      s"pool threads outlived stop(): ${poolThreads().map(_.getName).mkString(", ")}")
+  }
 }
