@@ -14,6 +14,10 @@
 # PipelineSpec + ApiSpec = the ledger path end to end (ingest → normalize →
 # by-wallet reads, as library calls and as served HTTP routes), so a break
 # in the reference's own product path is caught before handoff too.
+#
+# CodegenCacheSpec = the session keeps its generated classes across repeated
+# plans, so a session factory that drops GraftSession's codegen cache size
+# is caught here.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-sbt -batch "testOnly graft.QueriesSpec graft.PipelineSpec graft.ApiSpec"
+sbt -batch "testOnly graft.QueriesSpec graft.PipelineSpec graft.ApiSpec graft.CodegenCacheSpec"

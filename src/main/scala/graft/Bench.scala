@@ -31,6 +31,12 @@ import scala.jdk.CollectionConverters._
   *     sf0.1) is listed in "suspect" — an empty list is the artifact's own
   *     proof that no number in it is co-tenant-polluted.
   *
+  * Generated-code cache misses: each progress line carries
+  * "codegen_compiles", the Janino compiles over that query's reps (Spark's
+  * own `CodegenMetrics` counter, so no added job), and the compact summary
+  * carries the run's total. A repeated query should compile nothing after
+  * its first rep; a non-zero steady count means the cache evicted it.
+  *
   * Kill-safety (round 14 — r13's official artifact was rc=124 with NO
   * parsed numbers): one JSON progress line streams per completed query
   * (stdout + target/bench_partial.jsonl), so a killed run leaves a parsable
@@ -48,6 +54,9 @@ object Bench {
   private def loadavg1m(): Double =
     try Files.readString(Paths.get("/proc/loadavg")).trim.split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
+
+  private def compileCount(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -201,6 +210,7 @@ object Bench {
     }
     var truncated = false
     var done = 0
+    var codegenCompiles = 0L
     var degraded = false // sticky: 1-rep history would understate the projection
     // steady-calibrated deadline projection: per-query expected costs come
     // from the committed clean-window steady states; the window's observed
@@ -241,6 +251,7 @@ object Bench {
         val ts = scala.collection.mutable.ArrayBuffer[Double]()
         var failed = false
         var r = 0
+        val compiles0 = compileCount()
         while (r < repsEff && !failed) {
           val t0 = System.nanoTime()
           try {
@@ -253,12 +264,14 @@ object Bench {
           }
           r += 1
         }
+        val compiles = compileCount() - compiles0
+        codegenCompiles += compiles
         done += 1
         // one JSON line per completed query, streamed as it happens: a run
         // the harness kills mid-set still yields a parsable prefix (stdout
         // AND target/bench_partial.jsonl) instead of r13's empty artifact
         val progress = if (failed)
-          s"""{"bench_query":${jstr(name)},"error":${jstr(errors(name))},"done":$done,"of":${all.size},"elapsed_sec":${num(elapsedSec)}}"""
+          s"""{"bench_query":${jstr(name)},"error":${jstr(errors(name))},"codegen_compiles":$compiles,"done":$done,"of":${all.size},"elapsed_sec":${num(elapsedSec)}}"""
         else {
           timings(name) = median(ts.toSeq)
           mins(name) = ts.min
@@ -269,7 +282,7 @@ object Bench {
             ratios.enqueue(ts.min / est(name))
             if (ratios.size > 20) { ratios.dequeue(); () }
           }
-          s"""{"bench_query":${jstr(name)},"median":${num(timings(name))},"min":${num(mins(name))},"reps":$repsEff,"done":$done,"of":${all.size},"elapsed_sec":${num(elapsedSec)}}"""
+          s"""{"bench_query":${jstr(name)},"median":${num(timings(name))},"min":${num(mins(name))},"reps":$repsEff,"codegen_compiles":$compiles,"done":$done,"of":${all.size},"elapsed_sec":${num(elapsedSec)}}"""
         }
         println(progress)
         System.out.flush()
@@ -306,7 +319,7 @@ object Bench {
     // machine-readable totals. Additions-only: the full per-query line
     // (the declared contract) still prints, first.
     val summary =
-      s"""{"bench_summary":true,"queries_omitted":true,"metric":"total","unit":"sec","sf":${jstr(sfDir)},"n_ok":${timings.size},"n_err":${errors.size},"n_suspect":${suspect.size},"reps":$reps,"prestaged":$prestaged,"truncated":$truncated,"deadline_sec":${num(deadlineSec)},"stat":"median","waited_sec":${num(waitedSec)},"loadavg_start":${jstr(load0)},"loadavg_end":${jstr(load1)},"total_min":${num(totalMin)},"value":${num(total)}}"""
+      s"""{"bench_summary":true,"queries_omitted":true,"metric":"total","unit":"sec","sf":${jstr(sfDir)},"n_ok":${timings.size},"n_err":${errors.size},"n_suspect":${suspect.size},"reps":$reps,"prestaged":$prestaged,"truncated":$truncated,"deadline_sec":${num(deadlineSec)},"stat":"median","waited_sec":${num(waitedSec)},"loadavg_start":${jstr(load0)},"loadavg_end":${jstr(load1)},"total_min":${num(totalMin)},"codegen_compiles":$codegenCompiles,"value":${num(total)}}"""
     println(summary)
     System.out.flush()
     Files.createDirectories(Paths.get("target"))

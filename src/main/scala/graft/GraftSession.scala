@@ -20,9 +20,28 @@ import org.apache.spark.sql.SparkSession
   *    effect of whichever read helper ran first;
   *  - [[graft.plans.GraftExtensions]] injected, so the native expressions
   *    (`dot_product`, `minhash_signature`, `simhash64`, `word_shingles`)
-  *    resolve from SQL text as well as the Column API.
+  *    resolve from SQL text as well as the Column API;
+  *  - Spark's generated-code cache sized to graft's working set
+  *    ([[CodegenCacheEntries]]), so a repeated query reuses its compiled
+  *    classes instead of paying a Janino compile per class on every run.
+  *    Each entry is keyed by (thread context class loader, source), so the
+  *    driver and the executor threads each hold their own copy of a class;
+  *    Guava splits the slots into 4 LRU segments. At Spark's default of 100
+  *    slots, one pass over the eight queries of the `batch` benchmark
+  *    (~210 classes) evicted every class before its reuse and recompiled
+  *    ~195 of them per pass. The setting is STATIC and read once per JVM,
+  *    when `CodeGenerator` initializes at the first compile: a session built
+  *    after that, or one built elsewhere without it, gets whatever size the
+  *    first one fixed. Test sessions therefore set it from the same constant.
   */
 object GraftSession {
+
+  /** `spark.sql.codegen.cache.maxEntries` for every graft session. Measured
+    * working set: one `batch` benchmark pass needs ~210 generated classes,
+    * and a first pass over all 210 declared queries compiles about 3,000;
+    * 4096 leaves headroom for Guava's uneven split across its 4 segments.
+    */
+  val CodegenCacheEntries: Int = 4096
 
   def builder(appName: String, cores: Int): SparkSession.Builder =
     SparkSession.builder()
@@ -41,6 +60,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .withExtensions(new graft.plans.GraftExtensions)
 
   /** Build (or get) the session; if an existing session was returned (whose

@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions._
 /** Loaders for the driver-generated star-schema corpus (TESTDATA.md).
   *
   * One parquet file per table. All engine queries read through here so the
-  * scan path is uniform: schema comes from parquet footers (no inference
-  * cost), and filters/projections declared downstream reach the reader via
-  * Catalyst pushdown (verify with `.explain`: `PushedFilters`, `ReadSchema`).
+  * scan path is uniform: schema comes from the parquet footers, which every
+  * [[load]] reads in a one-task Spark job (`parquet at Tables.scala`, seen
+  * in every traced query construction), and filters/projections declared
+  * downstream reach the reader via Catalyst pushdown (verify with
+  * `.explain`: `PushedFilters`, `ReadSchema`).
   */
 object Tables {
 

@@ -6,6 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs — one JVM-wide session (specs run
   * forked but in the same test JVM), small shuffle parallelism for speed.
+  * The generated-code cache takes [[GraftSession.CodegenCacheEntries]]: the
+  * setting is read once per JVM, so without it here the test order would
+  * decide the cache size every spec runs under.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -22,5 +25,7 @@ object SparkSpec {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries",
+      GraftSession.CodegenCacheEntries.toString)
     .getOrCreate()
 }
